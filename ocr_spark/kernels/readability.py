@@ -29,7 +29,8 @@ import re
 from html.parser import HTMLParser
 
 from .php import PHP_TRIM_CHARS, collapse_ws, php_trim
-from .tables import _FAST_TAG, _FAST_UNSAFE, _clean_attrs
+from .tables import (_FAST_TAG, _FAST_UNSAFE, _clean_attrs,
+                     _reads_differently)
 
 _POSITIVE_RE = re.compile(
     r"article|body|content|entry|main|page|post|story|text|blog", re.I)
@@ -280,12 +281,14 @@ def _fast_tree_feed(b: _TreeBuilder, html: str) -> bool:
     # prescan ALL attribute strings BEFORE any builder mutation: the
     # caller falls back onto the SAME builder (unlike tables, which
     # constructs a fresh parser), so a mid-stream bail would leave a
-    # half-fed tree. _clean_attrs returns None where html.parser's
-    # tolerant grammar could tokenize differently — that input goes to
-    # the slow path untouched.
+    # half-fed tree. _reads_differently and _clean_attrs flag the tags
+    # html.parser's tolerant grammar could tokenize differently — that
+    # input goes to the slow path untouched.
     parsed = []
     for m in matches:
         closing, _name, attrs_s, selfclose = m.groups()
+        if _reads_differently(closing, attrs_s, selfclose):
+            return False
         attrs = []
         if not closing and not selfclose and attrs_s:
             attrs = _clean_attrs(attrs_s)

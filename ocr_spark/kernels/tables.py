@@ -171,10 +171,32 @@ def _clean_attrs(attrs_s: str):
     return attrs
 
 
+# An unquoted value running into the '/' of '/>' (html.parser glues the
+# '/' into it and reads a plain start tag: '<td colspan=2/>' is colspan
+# '2/', not a start-end tag).
+_UNQUOTED_TAIL = re.compile(r"=\s*(?![\"'])\S*$")
+
+
+def _reads_differently(closing: str, attrs_s: str, selfclose: str) -> bool:
+    """True for the _FAST_TAG matches html.parser tokenizes differently,
+    whatever their attributes: a name running past the fast name class
+    ('<table.x>': html.parser's name is 'table.x'), an end tag with
+    attributes (html.parser ends it at its first raw '>', so
+    '</p a="x>y">' leaves 'y">' as data), and a self-closing tag whose
+    last value is unquoted (_UNQUOTED_TAIL). Both fast feeds send such
+    input to html.parser."""
+    if attrs_s and not (attrs_s[0].isspace() or attrs_s[0] == "/"):
+        return True
+    if closing:
+        return bool(attrs_s.strip())
+    return bool(selfclose) and _UNQUOTED_TAIL.search(attrs_s) is not None
+
+
 def _fast_feed(p: _TableHTMLParser, html: str) -> bool:
     """Tokenize with regex and replay through p's handlers. Returns False
-    (caller falls back to html.parser) if any '<' is not a clean tag or
-    any cell tag's attrs are not cleanly tokenizable (_clean_attrs)."""
+    (caller falls back to html.parser) if any '<' is not a clean tag, any
+    tag reads differently in html.parser (_reads_differently), or any
+    cell tag's attrs are not cleanly tokenizable (_clean_attrs)."""
     pos = 0
     matches = list(_FAST_TAG.finditer(html))
     # every match consumes exactly one leading '<' (interior '<' can only
@@ -188,6 +210,8 @@ def _fast_feed(p: _TableHTMLParser, html: str) -> bool:
             p.handle_data(html[pos:m.start()])
         pos = m.end()
         closing, name, attrs_s, selfclose = m.groups()
+        if _reads_differently(closing, attrs_s, selfclose):
+            return False
         name = name.lower()
         if closing:
             p.handle_endtag(name)

@@ -3,7 +3,8 @@
 Spark plan (SURVEY.md §3.1 restatement, §4 custom work):
 
   read transcripts
-    → [optional] skew-salted repartition on (conv_id, turn_idx bucket)
+    → [optional] skew-salted repartition on (resume bucket, conv salt,
+      turn_idx cell)
     → mapInPandas extraction stage (Arrow batches; kernels from
       ocr_spark.kernels — all per-row logic lives here, nothing per-row in
       the driver)
@@ -19,10 +20,27 @@ Scale notes:
   so the Python stage is balanced. For inputs already well-bucketed (e.g.
   an Iceberg table bucketed by conv_id), pass salt_partitions=0 to skip the
   shuffle entirely and run map-only over the scan partitions.
-- resume bucket = pmod(xxhash64(conv_id), n_buckets): stable across runs
-  and cluster sizes (task partition ids are not), so a restarted job can
-  anti-join completed buckets from the manifest and process only the rest
-  (RunStore.php:20-31 atomic-draft analog, set-oriented).
+- The salt key leads with the resume bucket: with slices =
+  ceil(salt_partitions / n_buckets), a turn goes straight (no hashing) to
+  partition (bucket * slices + pmod(xxhash64(conv_id), slices) +
+  floor(turn_idx / turn_bucket_size)) mod salt_partitions. A bucket
+  without hot conversations then lands in one task, so the
+  bucket-partitioned write opens about max(salt_partitions, n_buckets)
+  files rather than one per (task, bucket) pair; a hot conversation's
+  turn cells go to consecutive partitions; and with more partitions than
+  buckets each bucket's conv slices fill distinct partitions. Hashing
+  the same three columns lets keys collide: on the 20-conversation,
+  4-bucket, 16-partition case in tests/test_plans.py it keeps 11
+  partitions busy, direct placement 13.
+- resume bucket = pmod(first 8 hex digits of md5(conv_id), n_buckets)
+  (bucket_expr): stable across runs, cluster sizes and engines (task
+  partition ids are not), so a restarted job can anti-join completed
+  buckets from the manifest and process only the rest (RunStore.php:20-31
+  atomic-draft analog, set-oriented).
+- After the write, one execution reads the committed data back with its
+  known (rejected, bucket) schema (no footer-inference job), aggregates
+  the per-bucket manifest, appends it, and observes the job's row total
+  (skipped buckets included) on the way, with no second count() scan.
 """
 
 from __future__ import annotations
@@ -31,7 +49,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                MapType, StringType, StructField, StructType,
@@ -280,9 +298,13 @@ def extract_turns(transcripts: DataFrame,
       None  → default: 2× cluster parallelism shuffle on the salted key
       0     → skip the repartition (map-only over scan partitions)
       n > 0 → explicit partition count
-    The salt key is (conv_id, floor(turn_idx / turn_bucket_size)): turns of
-    a hot conversation spread over many tasks while consecutive turns stay
-    together for Arrow-batch locality.
+    The salt key places each turn in partition (bucket * slices +
+    pmod(xxhash64(conv_id), slices) + floor(turn_idx / turn_bucket_size))
+    mod salt_partitions, slices = ceil(salt_partitions / n_buckets): a
+    resume bucket stays in one task unless it holds a hot conversation,
+    whose turns spread over many tasks while consecutive turns stay
+    together for Arrow-batch locality; with more partitions than buckets
+    the conv slices keep every partition busy.
     """
     spark = transcripts.sparkSession
     # null-key quarantine, JVM-side, BEFORE the Arrow stage: a malformed
@@ -299,10 +321,12 @@ def extract_turns(transcripts: DataFrame,
     if salt_partitions is None:
         salt_partitions = spark.sparkContext.defaultParallelism * 2
     if salt_partitions:
-        df = df.repartition(
-            salt_partitions,
-            F.col("conv_id"),
-            F.floor(F.col("turn_idx") / turn_bucket_size))
+        slices = -(-salt_partitions // n_buckets)
+        df = df.repartitionById(salt_partitions, F.pmod(
+            F.col("bucket") * slices
+            + F.pmod(F.xxhash64("conv_id"), F.lit(slices))
+            + F.floor(F.col("turn_idx") / turn_bucket_size),
+            F.lit(salt_partitions)).cast("int"))
     return df.mapInPandas(make_extract_fn(), schema=EXTRACT_SCHEMA)
 
 
@@ -356,13 +380,18 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
      .parquet(data_dir))
 
     # manifest from the committed data (exact counts, no extra job over the
-    # python stage: parquet scan + hash agg only)
-    out_df = spark.read.parquet(data_dir)
+    # python stage: parquet scan + hash agg only). The schema is known, so
+    # the read-back skips footer inference, and the job's row total is
+    # observed on the aggregate before completed buckets are dropped, so
+    # one execution both commits the manifest and counts every bucket.
+    out_df = spark.read.schema("rejected int, bucket int").parquet(data_dir)
     wall_ms = int((time.time() - t0) * 1000)
+    total = Observation()
     manifest = (
         out_df.groupBy("bucket")
         .agg(F.count("*").alias("rows_out"),
              F.sum("rejected").cast("long").alias("rows_rejected"))
+        .observe(total, F.sum("rows_out").alias("rows"))
         .withColumn("rows_in", F.col("rows_out"))  # 1:1 by construction
         .withColumn("run_id", F.lit(run_id))
         .withColumn("source_snapshot_id", F.lit(source_snapshot_id))
@@ -375,7 +404,7 @@ def run_extract_job(spark: SparkSession, transcripts: DataFrame,
         manifest = manifest.where(~F.col("bucket").isin(done))
     manifest.write.mode("append").parquet(manifest_dir)
 
-    rows = out_df.count()
+    rows = total.get["rows"] or 0
     return {
         "run_id": run_id,
         "rows_out": rows,

@@ -12,10 +12,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.timeout(560)
-def test_bench_emits_single_json_line():
+def test_bench_emits_single_json_line(tmp_path):
+    # the full record goes to tmp_path: running the suite must not
+    # overwrite the committed BENCH/last_run.json
+    full_path = tmp_path / "last_run.json"
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-               SPARK_GRAFT_CPUS="8")
+               SPARK_GRAFT_CPUS="8",
+               SPARK_GRAFT_BENCH_OUT=str(full_path))
     out = subprocess.run([sys.executable, os.path.join(ROOT, "bench.py")],
                          capture_output=True, text=True, cwd=ROOT,
                          timeout=540, env=env)
@@ -32,9 +36,9 @@ def test_bench_emits_single_json_line():
     # stay comfortably inside that window (r04's 3,057-char line was
     # silently truncated and recorded parsed=null)
     assert len(lines[0]) <= 1500, f"stdout line too long: {len(lines[0])}"
-    # the FULL per-query record must land in BENCH/last_run.json and
+    # the FULL per-query record must land in the requested file and
     # superset the stdout line's stable subset
-    full = json.load(open(os.path.join(ROOT, "BENCH", "last_run.json")))
+    full = json.loads(full_path.read_text())
     assert set(payload["queries"]) <= set(full["queries"])
     assert len(full["queries"]) >= len(payload["queries"])
     assert full["value"] == payload["value"]

@@ -115,6 +115,8 @@ def test_run_extract_job_and_resume(spark, tmp_path):
     m2 = run_extract_job(spark, t, out, run_id="r2", resume=True,
                          salt_partitions=4, n_buckets=8)
     assert m2["buckets_skipped"] == manifest.select("bucket").distinct().count()
+    # the reported total still counts the skipped buckets' committed rows
+    assert m2["rows_out"] == t.count()
     final = spark.read.parquet(m1["output"])
     assert final.count() == t.count()  # still exactly one row per turn
 
@@ -154,23 +156,24 @@ def test_resume_replaces_orphan_buckets(spark, tmp_path):
 
 
 def test_salting_splits_hot_conversations(spark):
-    """The salt key (conv_id, turn_idx//64) must spread a hot
-    conversation's turns over many partitions, while plain conv_id
-    partitioning concentrates them in one — the UDF map-stage skew fix
-    AQE cannot do on its own (SURVEY §4 item 1)."""
-    from pyspark.sql import functions as F
+    """The salted repartition must spread a hot conversation's turns over
+    many tasks — the UDF map-stage skew fix AQE cannot do on its own
+    (SURVEY §4 item 1) — while every other resume bucket stays whole in
+    one task. mapInPandas keeps the repartition's partitioning, so the
+    output's partition ids are the Python stage's tasks."""
     t = synthesize_transcripts(spark, 120, 4)  # hot convs carry 400 turns
-
-    def hot_partitions(df):
-        return (df.withColumn("p", F.spark_partition_id())
-                .where(F.col("conv_id") == "conv-000000")
-                .select("p").distinct().count())
-
-    unsalted = t.repartition(16, F.col("conv_id"))
-    salted = t.repartition(16, F.col("conv_id"),
-                           F.floor(F.col("turn_idx") / 64))
-    assert hot_partitions(unsalted) == 1, "baseline: hot conv on one task"
-    assert hot_partitions(salted) >= 4, "salted: hot conv split across tasks"
+    hot = ["conv-000000", "conv-000100"]
+    e = (extract_turns(t, salt_partitions=16)
+         .select("conv_id", "bucket", F.spark_partition_id().alias("p")))
+    spread = e.where(F.col("conv_id") == hot[0]).select("p").distinct()
+    assert spread.count() >= 4, "hot conv split across tasks"
+    per_bucket = (e.groupBy("bucket")
+                  .agg(F.countDistinct("p").alias("tasks"),
+                       F.max(F.col("conv_id").isin(hot)).alias("has_hot"))
+                  .collect())
+    cold = [r for r in per_bucket if not r.has_hot]
+    assert len(cold) >= 50
+    assert all(r.tasks == 1 for r in cold), "cold bucket split across tasks"
 
 
 def test_list_runs_catalog(spark, tmp_path):

@@ -56,6 +56,39 @@ def test_extraction_shuffles_at_most_once(spark, tmp_path):
         "map-only path: no shuffle at all"
 
 
+def test_extraction_write_opens_one_file_per_bucket(spark, tmp_path):
+    """The salt key leads with the resume bucket, so a bucket without a
+    hot conversation is extracted by one task and written as one file,
+    not one file per (task, bucket) pair."""
+    from ocr_spark.pipeline.extract import run_extract_job, stable_bucket_py
+    from ocr_spark.sources.synthetic import synthesize_transcripts
+    t = synthesize_transcripts(spark, 20, 4)
+    m = run_extract_job(spark, t, str(tmp_path / "run"), run_id="r1",
+                        salt_partitions=4, n_buckets=8)
+    hot = f"bucket={stable_bucket_py('conv-000000', 8)}"
+    layout = {d: [f for f in os.listdir(os.path.join(m["output"], d))
+                  if f.endswith(".parquet")]
+              for d in os.listdir(m["output"]) if d.startswith("bucket=")}
+    assert len(layout) == 8
+    for d, files in layout.items():
+        if d != hot:
+            assert len(files) == 1, f"{d}: {files}"
+
+
+def test_extraction_fills_partitions_beyond_bucket_count(spark):
+    """With more salt partitions than resume buckets, the conv salt
+    spreads each bucket over several partitions, so the Python stage
+    keeps its parallelism."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.pipeline.extract import extract_turns
+    from ocr_spark.sources.synthetic import synthesize_transcripts
+    t = synthesize_transcripts(spark, 20, 4)
+    e = extract_turns(t, salt_partitions=16, n_buckets=4)
+    busy = e.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert busy >= 12, f"only {busy} of 16 partitions hold rows"
+
+
 def test_scan_filter_prunes_at_source(spark):
     from ocr_spark.operators.relational import s1_scan_filter_sort
     from ocr_spark.plans import pushed_filters
