@@ -37,7 +37,7 @@ from ..operators.corpus import (_md5_long, lang_argmax_column,
 from ..operators.quality import PACK_SEQ_LEN, SMP_RATES, pack_placement_from
 from .curate import run_curation
 from .extract import run_extract_job
-from .util import write_manifest
+from .artifact import write_manifest
 
 CORPUS_PIPELINE_VERSION = "corpus-v1"
 
@@ -143,5 +143,5 @@ def run_corpus_pipeline(spark, transcripts: DataFrame, workdir: str,
     if shard_manifest is not None:
         manifest["shards"] = {"n_shards": shard_manifest["n_shards"],
                               "rows_out": shard_manifest["rows_out"]}
-    write_manifest(workdir, manifest)
+    write_manifest(os.path.join(workdir, "manifest.json"), manifest)
     return manifest

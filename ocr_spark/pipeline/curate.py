@@ -37,7 +37,7 @@ from ..operators.quality import (BENCH_MOD, CHUNK_TOKENS, CONTAM_NGRAM,
                                  MIN_TOKENS, SMP_RATES, _smp_threshold_u64,
                                  _TOKENS, token_shingle_expr,
                                  with_repetition_signals)
-from .util import write_manifest
+from .artifact import write_manifest
 
 # gate thresholds (documented defaults; callers override per corpus)
 # MIN_TOKENS / MAX_TOP_TOKEN_BP / MAX_DUP_BIGRAM_BP now live in
@@ -316,7 +316,7 @@ def run_curation(spark, docs: DataFrame, out_dir: str,
             "n_kept": funnel.get("kept", 0),
             "wall_sec": round(time.time() - t0, 3),
         }
-        write_manifest(out_dir, manifest)
+        write_manifest(os.path.join(out_dir, "manifest.json"), manifest)
         return manifest
     finally:
         flags.unpersist()

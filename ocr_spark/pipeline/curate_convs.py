@@ -46,7 +46,7 @@ from ..operators.extraction import (_agent_transcripts,
                                     DEGEN_MIN_TOKENS, degen_turns_ctes)
 from ..operators.quality import (CONTAM_NGRAM, _smp_threshold_u64,
                                  token_shingle_expr, with_repetition_signals)
-from .util import write_manifest
+from .artifact import write_manifest
 
 MIN_CONV_CHARS = 100     # assembled-conversation char floor
 CONV_KEEP_RATE = 0.8     # deterministic sampling keep rate
@@ -342,7 +342,7 @@ def run_conv_curation(spark, t: DataFrame, out_dir: str) -> dict:
             "n_kept": funnel.get("kept", 0),
             "wall_sec": round(time.time() - t0, 3),
         }
-        write_manifest(out_dir, manifest)
+        write_manifest(os.path.join(out_dir, "manifest.json"), manifest)
         return manifest
     finally:
         flags.unpersist()

@@ -30,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import artifact
 from .corpus_stats import append_stats, drift_check
 from .curate import curation_flags
 from .dedup_index import append_batch, check_batch
@@ -92,7 +93,6 @@ def commit_refresh(spark: SparkSession, stats_dir: str, index_dir: str,
     role: the lazy verdict plan reads the very parquet files the
     appends' atomic swaps replace. Each append is itself idempotent by
     batch_tag, so replaying both is safe."""
-    import shutil
     if ledger_dir is None:
         ledger_dir = os.path.join(stats_dir, "_refresh_ledger")
     ledger = os.path.join(ledger_dir, batch_tag)
@@ -100,11 +100,10 @@ def commit_refresh(spark: SparkSession, stats_dir: str, index_dir: str,
         fresh = refresh_verdicts(spark, stats_dir, index_dir, batch,
                                  drift_gate_bp=drift_gate_bp,
                                  sample_rates=sample_rates)
-        tmp = ledger + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(ledger_dir, exist_ok=True)
-        fresh.write.parquet(tmp)
-        os.rename(tmp, ledger)  # atomic: the ledger exists fully or not
+        # `<tag>.tmp`, published by one rename: the ledger exists fully
+        # or not at all
+        fresh.write.parquet(artifact.rewrite_dir(ledger, kind=""))
+        artifact.swap_in(ledger, kind="")
     verdicts = spark.read.parquet(ledger)
     admitted_ids = verdicts.where(F.col("admit")).select("doc_id")
     admitted = batch.join(admitted_ids, "doc_id")

@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.quality import N_TRAIN_SHARDS, shard_key_column
-from .util import write_manifest
+from .artifact import write_manifest
 
 SHARDS_VERSION = "shards-v1"
 DEFAULT_N_SHARDS = N_TRAIN_SHARDS
@@ -86,7 +86,7 @@ def write_training_shards(spark, docs: DataFrame, out_dir: str,
         "output": data_dir,
         "wall_ms": int((time.time() - t0) * 1000),
     }
-    write_manifest(out_dir, manifest)
+    write_manifest(os.path.join(out_dir, "manifest.json"), manifest)
     return manifest
 
 
@@ -158,5 +158,5 @@ def write_packed_chat_shards(spark, turns: DataFrame, out_dir: str,
         "output": data_dir,
         "wall_ms": int((time.time() - t0) * 1000),
     }
-    write_manifest(out_dir, manifest)
+    write_manifest(os.path.join(out_dir, "manifest.json"), manifest)
     return manifest
